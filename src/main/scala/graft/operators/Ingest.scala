@@ -132,7 +132,6 @@ object Ingest {
     // cell. (Manifest stays over THIS batch's rows, not a read-back of
     // outPath — dynamic overwrite preserves other parameters' old
     // partitions there, which must not leak into this batch's manifest.)
-    // Staging strategy via graft.materialize (Materialize.stage).
     val longDf = Materialize.stage(cubeToLong(cube, cfg))
     writeCube(longDf, outPath)
     manifest(longDf, cfg)

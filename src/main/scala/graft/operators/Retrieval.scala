@@ -90,7 +90,7 @@ object Retrieval {
     // session-standing (shared parquet), but each query re-stages the
     // scan — bm25From reads the index three times per plan (df agg,
     // corpus constants, the scoring scan)
-    Materialize.stage(Materialize.shared(spark, s"bm25Index:$dir")(
+    Materialize.stage(Materialize.shared(spark, "bm25Index", dir)(
       bm25Index(Tables.documents(spark, dir))))
 
   /** q116: BM25 more-like-this search — rides the session-standing

@@ -1074,32 +1074,29 @@ object Similarity {
   def pqDriftAudit(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     pqDriftAuditFrom(emb, gridProbes(emb), nlist = 16, nprobe = 4,
-      m = 8, dsub = 8, nCodes = 16, standingKey = Some(s"pqDriftIndex:$dir"))
+      m = 8, dsub = 8, nCodes = 16, standingDir = Some(dir))
   }
 
-  /** [[pqDriftAudit]] over explicit probes. With `standingKey`, the
+  /** [[pqDriftAudit]] over explicit probes. With `standingDir`, the
     * artifacts that EXIST BEFORE the audit runs — the probe panel, the
     * deployed quantizer, the residual table, and the stale (deployed)
     * codebook — are session-standing ([[Materialize.shared]], the
-    * q101/q103 deployment cadence: an index refresh is a new session,
-    * not an implicit re-read); the audit's own work (fresh retrain,
-    * exact ground truth, both score chains) stays per-query. */
+    * q101/q103 deployment cadence), keyed on one snapshot of
+    * `standingDir`; the audit's own work (fresh retrain, exact ground
+    * truth, both score chains) stays per-query. `emb` and `probes0` must
+    * be read from `standingDir` alone — the snapshot is the only data
+    * identity in the key. */
   def pqDriftAuditFrom(emb: DataFrame, probes0: DataFrame, nlist: Int,
       nprobe: Int, m: Int, dsub: Int, nCodes: Int,
-      standingKey: Option[String] = None): DataFrame = {
-    // the NUMERIC build parameters are folded into the cell key: cent
-    // depends on nlist, resid on cent, tcbStale on m/dsub/nCodes — a
-    // caller reusing one standingKey with different numbers gets a
-    // rebuild, not another parameterization's cached artifacts. The
-    // DATA inputs (emb, probes0) are NOT hashable into the key: the
-    // standingKey owner owns their identity — a key must name the
-    // corpus/probe source it was built from (pqDriftAudit derives it
-    // from `dir`, which pins both), and a caller pairing one key with
-    // different frames gets the first call's panel by design (the
-    // Materialize.shared snapshot contract).
-    def standing(sub: String)(df: => DataFrame): DataFrame = standingKey match {
-      case Some(k) => Materialize.shared(emb.sparkSession,
-        s"$k:$sub:$nlist:$m:$dsub:$nCodes")(df)
+      standingDir: Option[String] = None): DataFrame = {
+    // the numeric build parameters are key params: cent depends on
+    // nlist, resid on cent, tcbStale on m/dsub/nCodes. One snapshot keys
+    // all four cells, so resid and tcbStale are never built from another
+    // version of the corpus than cent.
+    val src = standingDir.map(Materialize.snapshot(emb.sparkSession, _))
+    def standing(sub: String)(df: => DataFrame): DataFrame = src match {
+      case Some(s) => Materialize.shared(emb.sparkSession, "pqDriftIndex", s,
+        sub, nlist, m, dsub, nCodes)(df)
       case None => Materialize.stage(df)
     }
     // probes (4 consumers: exact ground truth, the output spine, both

@@ -179,7 +179,7 @@ object Text {
     * dependence. A fresh session (the bench's isolated pass) still pays
     * the full training loop. */
   private[graft] def bpeSymShared(spark: SparkSession, dir: String): DataFrame =
-    Materialize.shared(spark, s"bpeSymTable:$dir")(
+    Materialize.shared(spark, "bpeSymTable", dir)(
       bpeSymTableFrom(Tables.documents(spark, dir)))
 
   /** Per-document BPE token counts under the corpus-learned merge
@@ -255,8 +255,7 @@ object Text {
   def zipfCensus(spark: SparkSession, dir: String): DataFrame = {
     val dec = (c: Column) => floor(c * 1e9).cast("decimal(28,9)")
     // Materialized once: the vocab totals and the top-100 window both
-    // re-read it, and the explode+agg behind it is the dominant cost
-    // (strategy via graft.materialize — Materialize.stage).
+    // re-read it, and the explode+agg behind it is the dominant cost.
     val freq = Tables.documents(spark, dir)
       .select(col("lang"), explode(toks).as("token"))
       .groupBy(col("lang"), col("token"))

@@ -403,8 +403,8 @@ object GeoTiff {
           path.toString, raster.width, raster.height, bytes.length.toLong)
       }
       .toDF("collection", "parameter", "time_key", "path", "width", "height", "n_bytes")
-    // run the .tif writes exactly once (every Materialize strategy is
-    // eager); the manifest itself is tiny
+    // run the .tif writes exactly once (the stage is eager); the
+    // manifest itself is tiny
     graft.operators.Materialize.stage(written)
   }
 

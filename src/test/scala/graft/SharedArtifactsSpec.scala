@@ -92,6 +92,16 @@ class SharedArtifactsSpec extends SparkSpec {
       rows(Curation.boilerplateCensusFrom(gramsDirect)))
   }
 
+  test("lsh hash table: session-standing table equals the direct build row-for-row") {
+    assert(rows(Dedup.hashedDocTable(spark, sfDir)) ==
+      rows(Dedup.hashedDocTableFrom(Tables.documents(spark, sfDir))))
+  }
+
+  test("span table: session-standing table equals the direct build row-for-row") {
+    assert(rows(Curation.spanTableShared(spark, sfDir)) ==
+      rows(Curation.spanRows(Tables.documents(spark, sfDir))))
+  }
+
   test("shared cells are built once per (session, key) and re-read after") {
     // two reads of the same shared artifact return identical rows and
     // the second is a parquet re-read (plan has no aggregation)
